@@ -57,6 +57,11 @@ def main() -> None:
             print(t, "copied")
             continue
         cols = [c[0] for c in con.execute(f"DESCRIBE SELECT * FROM '{p}'").fetchall()]
+        # a key at or above its stride would collide with the next copy's
+        # keys and silently corrupt join fan-out
+        for c, stride in OFFSETS.get(t, {}).items():
+            mx = con.execute(f"SELECT max({c}) FROM '{p}'").fetchone()[0]
+            assert mx is None or mx < stride, f"{t}.{c}: max {mx} >= stride {stride}"
         parts = []
         for i in range(FACTOR):
             sel = []

@@ -8,12 +8,25 @@ import pytest
 from pyspark.sql import functions as F
 
 from docprocai_service_spark.plans.pipeline import run_pipeline
+from docprocai_service_spark.reference_impl import run_reference
 from docprocai_service_spark.sources.manifest import StageStore
 from docprocai_service_spark.streaming.incremental import incremental_ingest
+
+TRIPLE_COLS = ["subj", "pred", "obj", "url", "warc_ts", "sent_no"]
 
 
 def _edges_key(df):
     return sorted(map(tuple, df.select("src_entity", "dst_entity", "pred", "weight").collect()))
+
+
+def _stored_triples(store):
+    return sorted(map(tuple, store.read("triples").select(*TRIPLE_COLS).collect()))
+
+
+def _oracle_triples(pages):
+    """reference_impl's triples for a Spark web_pages frame."""
+    _, triples, _ = run_reference([r.asDict() for r in pages.collect()])
+    return sorted(tuple(t[c] for c in TRIPLE_COLS) for t in triples)
 
 
 @pytest.fixture(scope="module")
@@ -175,14 +188,32 @@ def test_incremental_ingest_appends_only_new_keys(spark, spark_corpus, tmp_path)
     assert m2["new_pages"] == 0
     m3 = incremental_ingest(spark, pages, store)
     assert m3["new_pages"] == pages.count() - 120
-    # final state equals a fresh batch run over everything
-    from docprocai_service_spark.operators.extract import extract_stage
-    from docprocai_service_spark.operators.triples import triples_stage
+    # final state equals the oracle over everything
+    assert _stored_triples(store) == _oracle_triples(pages)
 
-    cols = ["subj", "pred", "obj", "url", "warc_ts", "sent_no"]
-    want = sorted(map(tuple, triples_stage(extract_stage(pages)).select(*cols).collect()))
-    got = sorted(map(tuple, store.read("triples").select(*cols).collect()))
-    assert got == want
+
+@pytest.fixture(scope="module")
+def unicode_ws_pages(spark):
+    from tests.test_fuzz_parity import UNICODE_WS_SENTENCES, sentence_pages
+
+    return sentence_pages(spark, UNICODE_WS_SENTENCES)
+
+
+def test_store_mode_triples_match_oracle_on_unicode_whitespace(
+    spark, spark_corpus, unicode_ws_pages, tmp_path
+):
+    """The resumable store path parses exactly like reference_impl on the
+    Unicode-whitespace rows of tests/test_fuzz_parity.py."""
+    _, alias = spark_corpus
+    d = str(tmp_path / "ws_store")
+    run_pipeline(spark, unicode_ws_pages, alias, out_dir=d)
+    assert _stored_triples(StageStore(spark, d)) == _oracle_triples(unicode_ws_pages)
+
+
+def test_incremental_triples_match_oracle_on_unicode_whitespace(spark, unicode_ws_pages, tmp_path):
+    store = StageStore(spark, str(tmp_path / "ws_inc"))
+    assert incremental_ingest(spark, unicode_ws_pages, store)["new_triples"] == 6
+    assert _stored_triples(store) == _oracle_triples(unicode_ws_pages)
 
 
 def test_incremental_full_dag_matches_batch(spark, spark_corpus, tmp_path):
@@ -258,13 +289,7 @@ def test_incremental_crash_between_stages_recovers(spark, spark_corpus, tmp_path
     m = incremental_ingest(spark, batch, store)
     assert m["new_pages"] == 60  # NOT silently skipped
     # no duplicate triples, and every downstream stage completed
-    from docprocai_service_spark.operators.extract import extract_stage
-    from docprocai_service_spark.operators.triples import triples_stage
-
-    cols = ["subj", "pred", "obj", "url", "warc_ts", "sent_no"]
-    want = sorted(map(tuple, triples_stage(extract_stage(batch)).select(*cols).collect()))
-    got = sorted(map(tuple, store.read("triples").select(*cols).collect()))
-    assert got == want
+    assert _stored_triples(store) == _oracle_triples(batch)
     assert store.is_done("mentions") and store.is_done("extracted")
     # re-delivery after full recovery is a no-op
     assert incremental_ingest(spark, batch, store)["new_pages"] == 0
@@ -347,9 +372,6 @@ def test_incremental_onto_batch_store_bootstraps_ledger(spark, spark_corpus, tmp
     """Incremental ingest onto a store built by a BATCH run must not re-merge
     the batch pages' edge weights (the ledger bootstraps from the committed
     triples stage before the first micro-batch appends)."""
-    from docprocai_service_spark.operators.extract import extract_stage
-    from docprocai_service_spark.operators.triples import triples_stage
-
     pages, alias = spark_corpus
     d = str(tmp_path / "handoff")
     b1 = pages.limit(200).localCheckpoint()

@@ -108,10 +108,11 @@ def test_whole_stage_codegen_in_triple_stage(spark, spark_corpus):
     # executedPlan string carries the literal WholeStageCodegen wrapper.
     executed = df._jdf.queryExecution().executedPlan().toString()
     assert "WholeStageCodegen" in executed or "* Project" in p or "* ColumnarToRow" in p
-    # exactly one Python boundary (the extract UDF); the triple parse is JVM.
-    # Guards against Catalyst pushing a predicate through the extract project
-    # and silently evaluating the (expensive) UDF twice per page.
+    # exactly two Python boundaries: the extract UDF and the parse. Guards
+    # against Catalyst pushing a predicate through the extract project and
+    # silently evaluating the (expensive) UDF twice per page.
     assert executed.count("ArrowEvalPython") == 1
+    assert executed.count("MapInPandas") == 1
     assert "BatchEvalPython" not in p  # no row-at-a-time Python UDFs anywhere
 
 

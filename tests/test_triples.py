@@ -2,27 +2,14 @@
 
 from __future__ import annotations
 
-import pytest as _pytest  # noqa: F401  (fixtures come from conftest)
-
-
-def test_fused_equals_staged_triples(spark, spark_corpus):
-    """fused mapInPandas path == extract-UDF + JVM-parse path, row for row."""
-    from docprocai_service_spark.operators.extract import extract_stage
-    from docprocai_service_spark.operators.triples import fused_triples_stage, triples_stage
-
-    pages, _ = spark_corpus
-    cols = ["subj", "pred", "obj", "url", "warc_ts", "sent_no"]
-    staged = sorted(map(tuple, triples_stage(extract_stage(pages)).select(*cols).collect()))
-    fused = sorted(map(tuple, fused_triples_stage(pages).select(*cols).collect()))
-    assert staged == fused
-    # partitioning invariance of the fused path
-    fused2 = sorted(map(tuple, fused_triples_stage(pages.repartition(11)).select(*cols).collect()))
-    assert fused == fused2
-
 import pytest
 
 from docprocai_service_spark.operators.extract import extract_stage
-from docprocai_service_spark.operators.triples import mentions_stage, triples_stage
+from docprocai_service_spark.operators.triples import (
+    fused_triples_stage,
+    mentions_stage,
+    triples_stage,
+)
 from docprocai_service_spark.reference_impl import run_reference
 
 
@@ -40,16 +27,25 @@ def spark_stages(spark, spark_corpus):
     return tri, men
 
 
+# Both entry paths into the one parse kernel: a materialized extracted stage
+# (store/resume mode, incremental ingest) and web_pages (no-store mode).
+ENTRIES = {
+    "staged": lambda pages: triples_stage(extract_stage(pages)),
+    "fused": fused_triples_stage,
+}
+
+
 def _tkey(t):
     return (t["subj"], t["pred"], t["obj"], t["url"], str(t["warc_ts"]), t["sent_no"])
 
 
-def test_triples_exact_match_vs_oracle(spark_stages, oracle):
-    tri, _ = spark_stages
+@pytest.mark.parametrize("entry", ENTRIES)
+def test_triples_exact_match_vs_oracle(spark_corpus, oracle, entry):
+    pages, _ = spark_corpus
     _, triples_o, _ = oracle
-    got = {_tkey(r.asDict()) for r in tri.collect()}
-    want = {_tkey(t) for t in triples_o}
-    assert got == want
+    # sorted lists, not sets: a duplicated triple is a failure too
+    got = sorted(_tkey(r.asDict()) for r in ENTRIES[entry](pages).collect())
+    assert got == sorted(_tkey(t) for t in triples_o)
 
 
 def test_triples_pr_vs_planted_truth(spark_stages, corpus):
@@ -83,12 +79,13 @@ def test_non_english_pages_skip_triple_stage(spark, spark_corpus):
     assert not urls & non_en
 
 
-def test_row_order_invariance(spark, spark_corpus):
+@pytest.mark.parametrize("entry", ENTRIES)
+def test_row_order_invariance(spark, spark_corpus, entry):
     """Shuffled input order → identical canonical outputs (SURVEY §5.2 #6)."""
     pages, _ = spark_corpus
     import pyspark.sql.functions as F
 
     shuffled = pages.orderBy(F.sha2(F.col("url"), 256)).repartition(11)
-    a = {_tkey(r.asDict()) for r in triples_stage(extract_stage(pages)).collect()}
-    b = {_tkey(r.asDict()) for r in triples_stage(extract_stage(shuffled)).collect()}
+    a = {_tkey(r.asDict()) for r in ENTRIES[entry](pages).collect()}
+    b = {_tkey(r.asDict()) for r in ENTRIES[entry](shuffled).collect()}
     assert a == b
